@@ -1,7 +1,8 @@
 package graft
 
 import org.apache.spark.scheduler.{SparkListener, SparkListenerApplicationEnd}
-import org.apache.spark.sql.SparkSession
+import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.storage.StorageLevel
 
 /** Session-scoped memoization with eviction when the session's context
   * shuts down (ADVICE r12: caches keyed by SparkSession in plain TrieMaps
@@ -32,7 +33,7 @@ object SessionCache {
     * runs). Re-persisting only re-registers; blocks repopulate lazily on
     * the next consumer's execution — a one-time cost, not a rebuild. */
   private val builtLevel = scala.collection.concurrent.TrieMap
-    .empty[(SparkSession, Any), org.apache.spark.storage.StorageLevel]
+    .empty[(SparkSession, Any), StorageLevel]
   private val hooked = java.util.Collections.newSetFromMap(
     new java.util.concurrent.ConcurrentHashMap[SparkSession, java.lang.Boolean])
 
@@ -78,7 +79,7 @@ object SessionCache {
         v match { // self-heal a dropped persist registration (see builtLevel)
           case df: org.apache.spark.sql.Dataset[_] =>
             builtLevel.get(k).foreach { lvl =>
-              if (df.storageLevel == org.apache.spark.storage.StorageLevel.NONE)
+              if (df.storageLevel == StorageLevel.NONE)
                 df.persist(lvl)
             }
           case _ =>
@@ -88,11 +89,23 @@ object SessionCache {
         val v = store.getOrElseUpdate(k, LayerMetrics.build(name)(mk))
         v match {
           case df: org.apache.spark.sql.Dataset[_]
-              if df.storageLevel != org.apache.spark.storage.StorageLevel.NONE =>
+              if df.storageLevel != StorageLevel.NONE =>
             builtLevel.put(k, df.storageLevel)
           case _ =>
         }
         v.asInstanceOf[V]
     }
   }
+
+  /** [[layer]] for a persisted frame: `mk`'s result is persisted
+    * MEMORY_AND_DISK and counted inside the layer's build timer, so the
+    * materialization is charged to the named layer at build time, not
+    * smeared over whichever consumer's action fires first. Frames kept
+    * here must be bounded by their inputs' row counts. */
+  def persisted(name: String, s: SparkSession, key: Any)(mk: => DataFrame): DataFrame =
+    layer(name, s, key) {
+      val df = mk.persist(StorageLevel.MEMORY_AND_DISK)
+      df.count()
+      df
+    }
 }

@@ -44,11 +44,11 @@ object Sessions {
       // (the superstep family's checkpointed `visited` frames reached ~100
       // near-empty partitions at sf0.1), and every downstream read pays
       // one task per pinned partition — measured as the dominant cost of
-      // the graph queries (ProfileS: 40-60 ms task deserialize × ~100
-      // tasks × ~25 stages with near-zero executor run time). With AQE
-      // allowed to re-plan cached output partitioning, cached/persisted
-      // frames coalesce to the advisory byte target like any other
-      // exchange — scale-adaptive in both directions (few partitions at
+      // the graph queries (OPTIMIZATION_r17.md, Phase 1: 40-60 ms task
+      // deserialize × ~100 tasks × ~25 stages with near-zero executor run
+      // time). With AQE allowed to re-plan cached output partitioning,
+      // cached/persisted frames coalesce to the advisory byte target like
+      // any other exchange — scale-adaptive in both directions (few partitions at
       // sf0.1, many at 100 TB), not a local[32] constant.
       .config("spark.sql.optimizer.canChangeCachedPlanOutputPartitioning", "true")
       .getOrCreate()

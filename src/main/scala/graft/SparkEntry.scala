@@ -26,37 +26,25 @@ object SparkEntry {
   /** Layer memo: the reference materializes marts as TABLES precisely
     * because the summary queries scan them repeatedly
     * (dbt_project.yml:28-30; SURVEY §4 materialization note). The Spark
-    * analog: persist each layer once per (session, sfDir) so the six
-    * summary queries reuse one computed mart instead of re-running
-    * dedup+stats+joins each. Layer row counts are bounded by the events
-    * table — safe to MEMORY_AND_DISK at any tested SF. */
-  // Build cost is recorded in LayerMetrics (VERDICT r10 #3) with an eager
-  // count() so the layer's materialization — the thing the bench's
-  // first_run/warm gap is made of — is charged to the named layer at build
-  // time, not smeared over whichever consumer's action fires first.
-  // Backed by SessionCache: entries evict with the session's context
-  // (ADVICE r12).
-  private def cached(key: String, s: SparkSession, dir: String)(mk: => DataFrame): DataFrame =
-    SessionCache.layer(key, s, dir) {
-      val df = mk.persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-      df.count()
-      df
-    }
-
+    * analog: persist each layer once per (session, sfDir) through
+    * [[SessionCache.persisted]] so the six summary queries reuse one
+    * computed mart instead of re-running dedup+stats+joins each. Layer row
+    * counts are bounded by the events table — safe to MEMORY_AND_DISK at
+    * any tested SF. */
   // staging IS persisted even though it is a narrow projection: the layer
   // fans out to byLoad, ops_row_counts, AND every window/grouping-sets
   // consumer inside the anomaly build — re-measured in round 3 (with the
   // spread scans) and dropping this persist still regressed the chain
   // 7.3s → 9.3s at sf0.1.
   private def ev(s: SparkSession, dir: String): DataFrame =
-    cached("staging", s, dir)(Staging.fromEvents(Tables.events(s, dir)))
+    SessionCache.persisted("staging", s, dir)(Staging.fromEvents(Tables.events(s, dir)))
   // Only the MART layer is persisted, not the intermediate anomalies frame:
   // the mart is the anomalies plus eight narrow derived columns, so the
   // anomalies view is recovered by dropping them from the cached mart — one
   // columnar encode instead of two for near-identical data (the round-2
   // chain persisted both and paid ~1.5s extra at sf0.1).
   private def martOf(s: SparkSession, dir: String): DataFrame =
-    cached("mart", s, dir)(MartReadings.fromStaging(ev(s, dir)))
+    SessionCache.persisted("mart", s, dir)(MartReadings.fromStaging(ev(s, dir)))
   private val martOnlyCols = Seq(
     "temperature_category", "reading_hour", "reading_day_of_week",
     "reading_date", "reading_month", "reading_year",

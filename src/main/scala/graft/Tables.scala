@@ -59,24 +59,25 @@ object Tables {
   def spreadNarrow(spark: SparkSession, df: DataFrame): DataFrame =
     spread(spark, df)
 
-  /** [[spread]] by HASH of `cols` instead of round-robin — for
-    * ALREADY-MATERIALIZED frames (localCheckpoint leaves) that feed
+  /** [[spread]] by HASH of `cols` instead of round-robin, over a
+    * localCheckpoint of `df` taken here — for frames that feed
     * per-row-compute-heavy pipelines (gram explodes, candidate fan-outs,
     * array_intersect verification) where row placement must stay
-    * deterministic without the round-robin pre-sort. Call it ON the
-    * checkpointed frame: there `.rdd.getNumPartitions` is metadata (no
-    * jobs — on an unmaterialized AQE frame it would execute every query
-    * stage). Same guard as [[spread]]: no-ops whenever the frame already
-    * carries at least half the session parallelism, so a cluster-scale
-    * materialization is never re-shuffled. Keys must be high-cardinality
-    * (content fingerprints, doc ids) so the hash spreads evenly (guide
-    * §2.5). r17: cached/checkpointed frames materialize AQE-coalesced now
-    * (canChangeCachedPlanOutputPartitioning) — right for exchange-bound
-    * consumers, wrong for compute-heavy narrow ones, which re-spread here
-    * exactly like the raw single-split scans. */
-  def spreadKeyed(spark: SparkSession, df: DataFrame, cols: Seq[org.apache.spark.sql.Column]): DataFrame = {
-    val target = spark.sparkContext.defaultParallelism
-    if (df.rdd.getNumPartitions * 2 < target) df.repartition(target, cols: _*) else df
+    * deterministic without the round-robin pre-sort. The partition-count
+    * guard reads the CHECKPOINTED frame, where `.rdd.getNumPartitions` is
+    * metadata (no jobs — on an unmaterialized AQE frame it would execute
+    * every query stage). Same guard as [[spread]]: no-ops whenever the
+    * materialization already carries at least half the session
+    * parallelism, so a cluster-scale frame is never re-shuffled. Keys must
+    * be high-cardinality (content fingerprints, doc ids) so the hash
+    * spreads evenly (guide §2.5). r17: cached/checkpointed frames
+    * materialize AQE-coalesced now (canChangeCachedPlanOutputPartitioning)
+    * — right for exchange-bound consumers, wrong for compute-heavy narrow
+    * ones, which re-spread here exactly like the raw single-split scans. */
+  def spreadKeyed(df: DataFrame, cols: Seq[org.apache.spark.sql.Column]): DataFrame = {
+    val cp = df.localCheckpoint()
+    val target = df.sparkSession.sparkContext.defaultParallelism
+    if (cp.rdd.getNumPartitions * 2 < target) cp.repartition(target, cols: _*) else cp
   }
 
   def region(spark: SparkSession, sfDir: String): DataFrame    = table(spark, sfDir, "region")

@@ -437,16 +437,14 @@ FROM per, tot"""
     // cached-plan AQE materializes this aggregate at ~1 partition at
     // small SF, and its consumers (prefix explode, candidate join, the
     // array_intersect verify) are compute-heavy narrow stages.
-    val perDoc = graft.Tables.spreadKeyed(members.sparkSession,
-      sets.join(freq, Seq("tok"))
+    val perDoc = graft.Tables.spreadKeyed(sets.join(freq, Seq("tok"))
       .groupBy("doc_id")
       .agg(sort_array(collect_list(col("rk"))).as("arr"),
         count(lit(1)).as("n"))
       // prefix length n − ⌈7n/10⌉ + 1, in pure integers
       .withColumn("plen", (col("n") - expr("(7*n + 9) div 10") + 1).cast("int"))
       .select(col("doc_id"), col("n"), col("arr"),
-        slice(col("arr"), lit(1), col("plen")).as("prefix_rks"))
-      .localCheckpoint(), Seq(col("doc_id")))
+        slice(col("arr"), lit(1), col("plen")).as("prefix_rks")), Seq(col("doc_id")))
     val prefix = perDoc.select(col("doc_id"), col("n"),
       explode(col("prefix_rks")).as("tok"))
     // PPJoin length filter inside candidate generation: J ≥ 7/10 forces

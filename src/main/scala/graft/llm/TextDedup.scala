@@ -44,12 +44,7 @@ object TextDedup {
     * each bench/verify pass tokenizes the corpus once, like the layer cache
     * in [[graft.SparkEntry]]. */
   private[llm] def gramSets(s: SparkSession, d: String): DataFrame =
-    graft.SessionCache.layer("grams", s, d) {
-      val df = gramSetsUncached(s, d)
-        .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-      df.count()
-      df
-    }
+    graft.SessionCache.persisted("grams", s, d)(gramSetsUncached(s, d))
 
   /** (doc_id, grams) table. Gram extraction runs as primitive string ops in
     * a typed mapPartitions: Catalyst's higher-order array functions are
@@ -237,12 +232,10 @@ WHERE CAST(n_shared AS DOUBLE) / CAST(s1.n + s2.n - n_shared AS DOUBLE) >= $Jacc
     // explode/tokenize then runs serial. Re-spread the CHECKPOINTED frame
     // by the content key (guarded no-op at real scale, where the
     // materialization already carries cluster parallelism).
-    val spark = grams.sparkSession
-    val reps = graft.Tables.spreadKeyed(spark, keyed.groupBy("fp")
+    val reps = graft.Tables.spreadKeyed(keyed.groupBy("fp")
       .agg(min(col("doc_id")).as("rep_id"),
         first(col("grams")).as("grams"),
-        count(lit(1)).as("gsz"))
-      .localCheckpoint(), Seq(col("fp")))
+        count(lit(1)).as("gsz")), Seq(col("fp")))
     (members, reps)
   }
 
@@ -420,12 +413,9 @@ WHERE CAST(n_shared AS DOUBLE) / CAST(s1.n + s2.n - n_shared AS DOUBLE) >= $Jacc
     * pair-count-sized (bounded by true near-dup volume), far smaller than
     * its build inputs. */
   def nearDupPairs(s: SparkSession, d: String): DataFrame =
-    graft.SessionCache.layer("near_dup_pairs", s, d) {
+    graft.SessionCache.persisted("near_dup_pairs", s, d) {
       val (members, reps, repPairs) = collapsedRepPairs(s, d)
-      val df = expandPairs(repPairs, members, reps)
-        .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-      df.count()
-      df
+      expandPairs(repPairs, members, reps)
     }
 
   /** Cluster assignments (doc_id, cluster_rep, is_kept), cached per
@@ -493,6 +483,31 @@ WHERE CAST(n_shared AS DOUBLE) / CAST(s1.n + s2.n - n_shared AS DOUBLE) >= $Jacc
       .select("d1", "d2", "n_shared", "jaccard")
     expandPairs(repPairs, members, reps)
   }
+
+  /** dedup_containment's vocabulary rank: `gdf` (g, df) gains `rk`,
+    * strictly increasing in the (df, g) total order. r17 (ADVICE r16): the
+    * rank is DISTRIBUTED — a range-partitioned sort on (df, g) plus
+    * monotonically_increasing_id. The gram dictionary grows with the
+    * corpus (shingle vocab is near-linear in tokens), so the r16
+    * single-task row_number window over it was the exact shape the
+    * global-window audit exists to catch. The id is NOT dense, but it is
+    * ORDER-ISOMORPHIC to the (df, g) total order (range partitions respect
+    * the sort order and the id's high bits are the partition index), and
+    * every consumer is invariant under any order-isomorphic injective
+    * gram->long map: the prefix slice takes the k smallest (same gram
+    * set), the candidate join tests rank equality, and n_shared/containment
+    * come from array_intersect SIZES of injectively mapped arrays — so the
+    * output is bit-identical to the dense-rank form (oracle re-proven).
+    * Unlike Ranks.globalRowNumber this stays a lazy DataFrame (no
+    * zipWithIndex count job, no RDD round-trip): the only extra cost over
+    * the window form is the range sampling pass, and no task ever holds
+    * the whole dictionary. The order-isomorphism rests on engine internals
+    * (range partitioning under AQE coalescing, the within-partition sort
+    * surviving EliminateSorts); DedupSpec pins it. */
+  private[llm] def vocabRank(gdf: DataFrame): DataFrame =
+    gdf.repartitionByRange(col("df"), col("g"))
+      .sortWithinPartitions("df", "g")
+      .withColumn("rk", monotonically_increasing_id())
 
   def queries: Map[String, (SparkSession, String) => DataFrame] = Map(
     // Observability for the exact-collapse tier (VERDICT r9 #7): the tier
@@ -580,27 +595,9 @@ WHERE CAST(n_shared AS DOUBLE) / CAST(s1.n + s2.n - n_shared AS DOUBLE) >= $Jacc
       // and the two per-fp windows (count + row_number) collapse into
       // one sort_array(collect_list) aggregate whose slice IS the
       // rarest-grams prefix. Same prefix set, same candidate set, same
-      // intersection sizes — oracle unchanged.
-      // r17 (ADVICE r16): the rank is DISTRIBUTED — a range-partitioned
-      // sort on the total order (df, g) plus monotonically_increasing_id.
-      // The gram dictionary grows with the corpus (shingle vocab is
-      // near-linear in tokens), so the r16 single-task row_number window
-      // over it was the exact shape the global-window audit exists to
-      // catch. The id is NOT dense, but it is ORDER-ISOMORPHIC to the
-      // (df, g) total order (range partitions respect the sort order and
-      // the id's high bits are the partition index), and every consumer
-      // is invariant under any order-isomorphic injective gram->long map:
-      // the prefix slice takes the k smallest (same gram set), the
-      // candidate join tests rank equality, and n_shared/containment
-      // come from array_intersect SIZES of injectively mapped arrays —
-      // so the output is bit-identical to the dense-rank form (oracle
-      // re-proven). Unlike Ranks.globalRowNumber this stays a lazy
-      // DataFrame (no zipWithIndex count job, no RDD round-trip): the
-      // only extra cost over the window form is the range sampling pass,
-      // and no task ever holds the whole dictionary.
-      val grk = gdf.repartitionByRange(col("df"), col("g"))
-        .sortWithinPartitions("df", "g")
-        .withColumn("rk", monotonically_increasing_id())
+      // intersection sizes — oracle unchanged. r17: [[vocabRank]] keeps
+      // the order but not the density.
+      val grk = vocabRank(gdf)
       // prefix length: n − ⌈t·n⌉ + 1 = n − (4n+4) div 5 + 1 at t = 4/5,
       // in pure integer arithmetic (a double t·n can round the boundary).
       // Checkpointed once: feeds the prefix explode, the probe side and
@@ -609,13 +606,12 @@ WHERE CAST(n_shared AS DOUBLE) / CAST(s1.n + s2.n - n_shared AS DOUBLE) >= $Jacc
       // cached-plan AQE materializes this aggregate at ~1 partition at
       // small SF, and its consumers (prefix explode, candidate join, the
       // array_intersect verify) are compute-heavy narrow stages.
-      val perRep = graft.Tables.spreadKeyed(s, flat.join(grk.select("g", "rk"), "g")
+      val perRep = graft.Tables.spreadKeyed(flat.join(grk.select("g", "rk"), "g")
         .groupBy("fp")
         .agg(sort_array(collect_list(col("rk"))).as("arr"),
           count(lit(1)).as("n1c"))
         .withColumn("plen",
-          (col("n1c") - expr("(n1c * 4 + 4) div 5") + 1).cast("int"))
-        .localCheckpoint(), Seq(col("fp")))
+          (col("n1c") - expr("(n1c * 4 + 4) div 5") + 1).cast("int")), Seq(col("fp")))
       val prefix = perRep.select(col("fp").as("fp1"),
         explode(slice(col("arr"), lit(1), col("plen"))).as("rk"))
       val cands = prefix
@@ -1150,9 +1146,8 @@ WHERE CAST(n_shared AS DOUBLE) / CAST(s1.n + s2.n - n_shared AS DOUBLE) >= $Jacc
         // guarded no-op at real scale). The GRAM stream itself stays
         // recompute-not-materialize (r16 measurement: persisting the
         // G×-corpus stream costs more than re-running the flatMap).
-        val r = graft.Tables.spreadKeyed(s, keyed.groupBy("fp")
-          .agg(first(col("text")).as("text"), count(lit(1)).as("copies"))
-          .localCheckpoint(), Seq(col("fp")))
+        val r = graft.Tables.spreadKeyed(keyed.groupBy("fp")
+          .agg(first(col("text")).as("text"), count(lit(1)).as("copies")), Seq(col("fp")))
         (r, (spans: DataFrame) =>
           // expansion: every member of a text group reports its rep's spans
           spans.join(members, "fp")

@@ -1289,9 +1289,10 @@ object Analytics {
       // 2-column projection first (guarded no-op on multi-split inputs).
       // r17: REVERTED from the late-r16 Ranks.exactGroupedPercentileArray
       // rewrite (fd9ee95) per VERDICT r16 item 2 — paired A/B in one JVM
-      // (graft.Micro, 32 cores, sf0.1, warm passes) measured the grouped
-      // rank-select at 2.73-3.21 s vs 2.06-3.04 s for this form (the
-      // driver read the same: 1.76 -> 1.99 s). The grouped-rank mechanism
+      // (32 cores, sf0.1, warm passes; OPTIMIZATION_r17.md, "outlier_iqr
+      // settled") measured the grouped rank-select at 2.73-3.21 s vs
+      // 2.06-3.04 s for this form (the driver read the same: 1.76 ->
+      // 1.99 s). The grouped-rank mechanism
       // stays in Ranks for inputs where a GROUP's distinct-value count
       // grows unboundedly; here the group count is fixed at 3 (returnflag)
       // so the counts-map merge is 3-way parallel and bounded by distinct

@@ -47,12 +47,12 @@ object Graph {
     * and fanned out to every consumer (bfs_hops, label_propagation,
     * closeness_centrality) — the production posture: a pipeline
     * materializes its graph edges once, not per algorithm. Persisted +
-    * counted inside the layer builder, so each consumer's supersteps
+    * counted inside the layer build (SessionCache.persisted), so each consumer's supersteps
     * start from cached blocks instead of re-running the lineitem scan +
     * pair distinct (round 14: closeness_centrality's driver-flagged cold
     * cost was dominated by exactly that rebuild). */
   private def symmetricEdges(s: SparkSession, d: String): DataFrame =
-    graft.SessionCache.layer("graph_edges", s, d) {
+    graft.SessionCache.persisted("graph_edges", s, d) {
       // supplier count stays IN the plan (broadcast 1-row frame, the
       // drift_tvd pattern), the same shape as the oracle's scalar subquery
       val nSupp = Tables.supplier(s, d).agg(count(lit(1)).as("n_supp"))
@@ -64,11 +64,8 @@ object Graph {
       val e = raw.select(
           least(col("x"), col("y")).as("a"), greatest(col("x"), col("y")).as("b"))
         .distinct()
-      val sym = e.select(col("a").as("src"), col("b").as("dst"))
+      e.select(col("a").as("src"), col("b").as("dst"))
         .unionByName(e.select(col("b").as("src"), col("a").as("dst")))
-        .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-      sym.count()
-      sym
     }
 
   /** The WIDE variant of the shared graph (node domain 4× the supplier
@@ -79,7 +76,7 @@ object Graph {
     * stress_centrality and degree_assortativity; same
     * build-once-per-(session, dir) posture as [[symmetricEdges]]. */
   private def symmetricEdgesWide(s: SparkSession, d: String): DataFrame =
-    graft.SessionCache.layer("graph_edges_wide", s, d) {
+    graft.SessionCache.persisted("graph_edges_wide", s, d) {
       val nSupp = Tables.supplier(s, d).agg(count(lit(1)).as("n_supp"))
       val raw = Tables.lineitem(s, d)
         .filter(col("l_orderkey") % 10 === 0)
@@ -90,11 +87,8 @@ object Graph {
       val e = raw.select(
           least(col("x"), col("y")).as("a"), greatest(col("x"), col("y")).as("b"))
         .distinct()
-      val sym = e.select(col("a").as("src"), col("b").as("dst"))
+      e.select(col("a").as("src"), col("b").as("dst"))
         .unionByName(e.select(col("b").as("src"), col("a").as("dst")))
-        .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-      sym.count()
-      sym
     }
 
   /** Bounded BFS from node 1: min-hop label per node within 4 hops.

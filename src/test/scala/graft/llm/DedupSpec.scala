@@ -20,6 +20,32 @@ class DedupSpec extends SparkSpec {
     assert(mh === exact)
   }
 
+  test("dedup_containment's vocabulary rank is strictly increasing in (df, g) order") {
+    // vocabRank's order-isomorphism rests on engine internals (range
+    // partitioning under AQE coalescing, the within-partition sort
+    // surviving EliminateSorts, monotonically_increasing_id's partition
+    // bits): a Spark upgrade that breaks them must fail here, not in the
+    // oracle. Checked as configured (AQE coalesces this scale to one
+    // range partition) and uncoalesced (several partitions, so the order
+    // must also hold ACROSS partitions).
+    val (_, reps) = TextDedup.collapsedOf(spark, sf)
+    val gdf = reps.select(explode(col("grams")).as("g"))
+      .groupBy("g").agg(count(lit(1)).as("df"))
+    val coalesceKey = "spark.sql.adaptive.coalescePartitions.enabled"
+    for (coalesce <- Seq("true", "false")) {
+      spark.conf.set(coalesceKey, coalesce)
+      val ranked = try TextDedup.vocabRank(gdf).select("df", "g", "rk").collect()
+          .map(r => (r.getLong(0), r.getString(1), r.getLong(2)))
+          .sortBy(r => (r._1, r._2))
+        finally spark.conf.unset(coalesceKey)
+      assert(ranked.length > 1)
+      if (coalesce == "false")
+        assert(ranked.map(_._3 >>> 33).distinct.length > 1, "expected several range partitions")
+      val drops = ranked.sliding(2).count { case Array(a, b) => a._3 >= b._3 }
+      assert(drops === 0, s"coalesce=$coalesce: rk not strictly increasing in (df, g)")
+    }
+  }
+
   test("streaming near-dup gate emits exactly the batch verified pair set") {
     // the flatMapGroupsWithState candidate path (per-bucket id state,
     // pairs emitted on second arrival) must reduce to the same verified

@@ -2,7 +2,11 @@ package graft.streaming
 
 import java.nio.file.Files
 
+import scala.jdk.CollectionConverters._
+import scala.util.Using
+
 import org.apache.spark.sql.functions._
+import org.scalatest.BeforeAndAfterAll
 
 import graft.SparkSpec
 
@@ -15,7 +19,14 @@ import graft.SparkSpec
   * (a) the probe's verdict on both regimes and (b) that the HOT branch —
   * which the sf testdata never exercises through the oracle gate —
   * still emits exactly the batch interval-join rows. */
-class StreamJoinKeySpec extends SparkSpec {
+class StreamJoinKeySpec extends SparkSpec with BeforeAndAfterAll {
+
+  private val hotRoot = Files.createTempDirectory("graft_hotev_")
+
+  override def afterAll(): Unit =
+    try Using.resource(Files.walk(hotRoot))(_.iterator().asScala.toSeq.reverse)
+      .foreach(Files.deleteIfExists)
+    finally super.afterAll()
 
   /** Synthetic skewed events: one user owns 1100 clicks and 1100
     * purchases (c·p ≈ 1.2e6, over the 2^20 threshold), spaced 2 h apart
@@ -24,7 +35,7 @@ class StreamJoinKeySpec extends SparkSpec {
   private lazy val hotDir: String = {
     val spark0 = spark
     import spark0.implicits._
-    val dir = Files.createTempDirectory("graft_hotev_").toString
+    val dir = hotRoot.toString
     val hot = (0 until 1100).flatMap { i =>
       val base = 1700000000000000L + i.toLong * 7200L * 1000000L
       Seq(
